@@ -27,7 +27,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast, pandas_udf
-from pyspark.sql.types import ArrayType, DoubleType, LongType
+from pyspark.sql.types import (
+    ArrayType, DoubleType, IntegerType, LongType, StructField,
+)
 
 from resin_spark.functions import vectors as V
 
@@ -381,22 +383,36 @@ def brute_topk_oracle(k: int = 10, n_queries: int = 5) -> str:
     """
 
 
-def hyperplane_buckets_udf(dims: int, n_planes: int, n_tables: int,
+def hyperplane_buckets_udf(dims: int | None, n_planes: int, n_tables: int,
                            seed0: int = 7):
     """All n_tables bucket ids in ONE Arrow pass: a single
     (batch × dims) @ (dims × tables·planes) matmul, bits packed per
     table. One UDF stage instead of n_tables — the corpus is read and
-    shipped through Arrow exactly once."""
-    rng_planes = [
-        np.random.RandomState(seed0 + t).standard_normal((n_planes, dims))
-        for t in range(n_tables)
-    ]
-    all_planes = np.vstack(rng_planes)  # (tables*planes, dims)
+    shipped through Arrow exactly once.
+
+    ``dims=None`` takes the width from each Arrow batch: the seeded
+    planes are a function of (seed0, table, width) only, so they are
+    built once per width seen and equal the planes a caller-supplied
+    width gives — no driver-side width probe is needed. A given
+    ``dims`` is checked against every batch instead."""
+    planes: dict[int, np.ndarray] = {}
+
+    def planes_for(width: int) -> np.ndarray:
+        if dims is not None and width != dims:
+            raise ValueError(f"hyperplane_buckets_udf: {width}-wide "
+                             f"vectors, planes built for {dims}")
+        if width not in planes:
+            planes[width] = np.vstack([
+                np.random.RandomState(seed0 + t)
+                .standard_normal((n_planes, width))
+                for t in range(n_tables)
+            ])  # (tables*planes, width)
+        return planes[width]
 
     @pandas_udf(ArrayType(LongType()))
     def buckets(vecs: pd.Series) -> pd.Series:
         m = np.vstack(vecs.to_numpy())
-        bits = (m @ all_planes.T) > 0  # (batch, tables*planes)
+        bits = (m @ planes_for(m.shape[1]).T) > 0  # (batch, tables*planes)
         out = np.zeros((len(m), n_tables), dtype=np.int64)
         for t in range(n_tables):
             for j in range(n_planes):
@@ -437,12 +453,13 @@ _DIMS_CACHE: dict = {}
 
 def _probe_dims(emb: DataFrame, vec_col: str) -> int:
     """Vector width from a single-row probe — schemas don't carry array
-    length, and a hardcoded dims crashes the hyperplane matmul on any
-    corpus whose width differs.
+    length. Only width CHECKS and the IVF/PQ trainers need it on the
+    driver; hyperplane hashing sizes its planes from each Arrow batch
+    (hyperplane_buckets_udf).
 
     Memoized per (plan semanticHash, column) like corpus_bytes_estimate:
     the width of a static relation is a plan property, so repeated
-    LSH/IVF/incremental calls in one session pay the probe job once.
+    IVF/incremental calls in one session pay the probe job once.
     In-process only — a fresh driver run always re-probes."""
     try:
         key = (emb.semanticHash(), vec_col)
@@ -477,12 +494,12 @@ def lsh_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
     and the single equi-join key is (table, bucket): cost ≈ corpus ×
     tables, never corpus².
 
-    ``dims=None`` (default) probes the vector width from the data.
+    ``dims=None`` (default) hashes at the width of the vectors
+    themselves (see hyperplane_buckets_udf); a given ``dims`` must
+    match it.
     """
     emb = valid_vectors(emb, vec_col)
     queries = valid_vectors(queries, q_vec)
-    if dims is None:
-        dims = _probe_dims(emb, vec_col)
     h = hyperplane_buckets_udf(dims, n_planes, n_tables)
     eb = emb.select(
         F.col(id_col), F.col(vec_col),
@@ -524,12 +541,11 @@ def write_ann_index(emb: DataFrame, path: str, dims: int | None = None,
     is (tbl, bucket, id, vector) partitioned by tbl and sorted by bucket
     within files, so a probe reads only its table's directory and skips
     row groups via bucket min/max statistics — seek-equivalent I/O with
-    zero custom file format. ``dims=None`` probes the vector width; the
-    reader side must hash queries with the SAME dims/planes/seed.
+    zero custom file format. ``dims=None`` hashes at the vectors' own
+    width; the reader side must hash queries with the SAME
+    planes/seed.
     """
     emb = valid_vectors(emb, vec_col)
-    if dims is None:
-        dims = _probe_dims(emb, vec_col)
     h = hyperplane_buckets_udf(dims, n_planes, n_tables, seed0)
     idx = (
         emb.select(F.col(id_col), F.col(vec_col),
@@ -555,11 +571,11 @@ def lsh_topk_indexed(index: DataFrame, queries: DataFrame, k: int = 10,
     the same seeds (including the multi-probe ball), and the
     (tbl, bucket) equi-join prunes the scan to the probed
     partitions/row groups. Identical output to :func:`lsh_topk` on the
-    same corpus and parameters. ``dims=None`` probes the query width —
-    it must equal the width the index was written with."""
+    same corpus and parameters. ``dims=None`` hashes queries at their
+    own width — it must equal the width the index was written with
+    (append_ann_index and validate_ann_index check the stored side).
+    Planning runs no job beyond the caller's read of the index."""
     queries = valid_vectors(queries, q_vec)
-    if dims is None:
-        dims = _probe_dims(queries, q_vec)
     h = hyperplane_buckets_udf(dims, n_planes, n_tables, seed0)
     qb = _multi_probe(
         queries.select(
@@ -1187,12 +1203,29 @@ def write_pq_index(emb: DataFrame, path: str, m_sub: int = 8,
         .write.mode("overwrite").parquet(f"{path}/codes")
 
 
+PQ_CODEBOOKS_SCHEMA = "m int, c int, centroid array<double>"
+
+
 def read_pq_index(spark, path: str):
-    """(codes DataFrame, codebooks ndarray) from a write_pq_index dir."""
-    rows = spark.read.parquet(f"{path}/codebooks").collect()
+    """(codes DataFrame, codebooks ndarray) from a write_pq_index dir.
+    The codebooks read under their declared schema in one job and must
+    fill the whole (m, c) grid with equal-width centroids; an empty or
+    holed codebook relation raises instead of serving zero centroids.
+    The codes schema (caller-chosen id column) is inferred."""
+    rows = spark.read.schema(PQ_CODEBOOKS_SCHEMA) \
+        .parquet(f"{path}/codebooks").collect()
+    if not rows:
+        raise ValueError(f"{path}: empty PQ codebook relation")
     m_sub = max(r["m"] for r in rows) + 1
     n_codes = max(r["c"] for r in rows) + 1
     d_sub = len(rows[0]["centroid"])
+    grid = [(m, c) for m in range(m_sub) for c in range(n_codes)]
+    if sorted((r["m"], r["c"]) for r in rows) != grid \
+            or any(len(r["centroid"]) != d_sub for r in rows):
+        raise ValueError(
+            f"{path}: PQ codebooks do not fill the {m_sub}x{n_codes} "
+            f"(m, c) grid once each with {d_sub}-wide centroids "
+            f"({len(rows)} rows)")
     books = np.zeros((m_sub, n_codes, d_sub))
     for r in rows:
         books[r["m"], r["c"]] = r["centroid"]
@@ -1228,16 +1261,39 @@ def _ivf_cell_udf(cent: np.ndarray):
     return cell_of
 
 
-def _ivf_probe_udf(cent: np.ndarray, probe_n: int):
-    @pandas_udf(ArrayType(LongType()))
-    def probe_cells(vecs: pd.Series) -> pd.Series:
-        m = np.array([np.asarray(v, dtype=np.float64) for v in vecs])
-        n = np.linalg.norm(m, axis=1, keepdims=True)
-        n[n == 0] = 1.0
-        s = (m / n) @ cent.T
-        top = np.argsort(-s, axis=1)[:, :probe_n].astype(np.int64)
-        return pd.Series(list(top))
-    return probe_cells
+def _ivf_probe(queries: DataFrame, cent: np.ndarray, probe_n: int,
+               q_id: str = "query_id", q_vec: str = "q_vec") -> DataFrame:
+    """(q_id, q_vec, cell int): each query repeated once per each of its
+    ``probe_n`` nearest centroids (normalise, matmul, argsort — the
+    ann_topk_ivf probe kernel).
+
+    The kernel runs as ``mapInPandas``, a plan node rather than a UDF
+    expression, so a broadcast of this relation keeps the same plan
+    Spark's dynamic partition pruning plans for its own filter side:
+    the pruning subquery reuses the broadcast, and the probe runs once
+    per query execution instead of once more for a driver-side cell
+    list. The trailing ``cell >= 0`` keeps every row (cells are
+    indices); it is the comparison Spark looks for before it plans a
+    dynamic partition filter at all, which a bare query frame (a local
+    relation, say) would otherwise lack."""
+    schema = queries.select(q_id, q_vec).schema \
+        .add(StructField("cell", IntegerType()))
+
+    def probe(batches):
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            m = np.array([np.asarray(v, dtype=np.float64)
+                          for v in pdf[q_vec]])
+            n = np.linalg.norm(m, axis=1, keepdims=True)
+            n[n == 0] = 1.0
+            top = np.argsort(-((m / n) @ cent.T), axis=1)[:, :probe_n]
+            out = pdf.loc[pdf.index.repeat(probe_n)].reset_index(drop=True)
+            out["cell"] = top.reshape(-1).astype(np.int32)
+            yield out
+
+    return queries.select(q_id, q_vec).mapInPandas(probe, schema) \
+        .filter(F.col("cell") >= 0)
 
 
 ANN_REPORT_CONFIGS = (
@@ -1332,10 +1388,8 @@ def ann_recall_report(emb: DataFrame, queries: DataFrame,
             eb = emb.select(
                 F.col(id_col),
                 _ivf_cell_udf(cent)(F.col(vec_col)).alias("cell"))
-            qb = queries.select(
-                F.col(q_id),
-                F.explode(_ivf_probe_udf(cent, probe_n)(
-                    F.col(q_vec))).alias("cell"))
+            qb = _ivf_probe(queries, cent, probe_n, q_id, q_vec) \
+                .select(q_id, "cell")
             n_cand = (
                 eb.join(broadcast(qb), "cell")
                 .filter(F.col(id_col) != F.col(q_id))
@@ -1399,12 +1453,23 @@ def write_ivf_index(emb: DataFrame, path: str, n_cells: int = 64,
     )
 
 
+IVF_CENTROIDS_SCHEMA = "cell int, centroid array<double>"
+
+
 def read_ivf_index(spark, path: str):
     """(entries_frame, centroid_matrix) from a write_ivf_index dir.
-    The centroid matrix is rebuilt cell-ordered (cells are the train
-    indices 0..n-1, so row i IS cell i's centroid)."""
-    rows = spark.read.parquet(f"{path}/centroids").orderBy("cell") \
-        .collect()
+    Row i of the matrix IS cell i's centroid (cells are the train
+    indices 0..n-1), so a store whose cells are not exactly 0..n-1
+    raises: a missing row would silently renumber every later cell.
+    The centroids read under their declared schema in one job; the
+    entries schema (caller-chosen id and vector columns) is inferred."""
+    rows = sorted(spark.read.schema(IVF_CENTROIDS_SCHEMA)
+                  .parquet(f"{path}/centroids").collect(),
+                  key=lambda r: r["cell"])
+    cells = [r["cell"] for r in rows]
+    if cells != list(range(len(cells))):
+        raise ValueError(f"{path}: centroid cells are not 0..n-1 "
+                         f"(n={len(cells)}, got {cells[:8]}...)")
     cent = np.array([r["centroid"] for r in rows], dtype=np.float64)
     return spark.read.parquet(f"{path}/entries"), cent
 
@@ -1415,22 +1480,18 @@ def ivf_topk_indexed(entries: DataFrame, cent: np.ndarray,
                      q_id: str = "query_id",
                      q_vec: str = "q_vec") -> DataFrame:
     """ann_topk_ivf's probe phase against a persisted index: each
-    query expands to its n_probe nearest stored centroids, the probed
-    cell ids (≤ |queries| × n_probe scalars) prune the entries scan to
-    their partition directories, and candidates rescore with the exact
-    JVM cosine — row-identical to ann_topk_ivf at the same training
+    query expands to its n_probe nearest stored centroids (_ivf_probe)
+    and the broadcast (query, cell) side joins the entries on their
+    partition column, so Spark's dynamic partition pruning reads only
+    the probed cells' directories — the cell list comes from the
+    broadcast inside the query's own execution, with no driver-side
+    collect and no planning job. Candidates rescore with the exact JVM
+    cosine — row-identical to ann_topk_ivf at the same training
     parameters; n_probe = n_cells still degrades to brute force."""
-    queries = valid_vectors(queries, q_vec)
-    probe_n = min(n_probe, len(cent))
-    qb = queries.select(
-        F.col(q_id), F.col(q_vec),
-        F.explode(_ivf_probe_udf(cent, probe_n)(F.col(q_vec)))
-        .alias("cell"))
-    qb = qb.withColumn("cell", F.col("cell").cast("int"))
-    probed = [r["cell"] for r in qb.select("cell").distinct().collect()]
+    qb = _ivf_probe(valid_vectors(queries, q_vec), cent,
+                    min(n_probe, len(cent)), q_id, q_vec)
     scored = (
-        entries.filter(F.col("cell").isin(probed))
-        .join(broadcast(qb), "cell")
+        entries.join(broadcast(qb), "cell")
         .filter(F.col(id_col) != F.col(q_id))
         .select(
             F.col(q_id),

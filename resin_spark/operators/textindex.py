@@ -40,6 +40,17 @@ def _term_bucket(term, n_buckets: int = N_TERM_BUCKETS):
     return F.pmod(F.xxhash64(term), F.lit(n_buckets)).cast("int")
 
 
+def _doc_tokens(docs: DataFrame) -> DataFrame:
+    """(doc_id bigint, pos, term) rows of a corpus — the one tokenise
+    both writers share. doc_id is cast to the stores' declared bigint
+    so the read side can name its schemas instead of inferring them."""
+    return (
+        docs.filter(F.col("doc_id").isNotNull())
+        .select(F.col("doc_id").cast("bigint").alias("doc_id"),
+                F.posexplode(T.tokens("text")).alias("pos", "term"))
+    )
+
+
 def write_text_index(docs: DataFrame, path: str,
                      n_buckets: int = N_TERM_BUCKETS) -> None:
     """Persist the inverted index of a corpus:
@@ -59,11 +70,7 @@ def write_text_index(docs: DataFrame, path: str,
 
     Deterministic: same corpus → byte-identical relations.
     """
-    toks = (
-        docs.filter(F.col("doc_id").isNotNull())
-        .select("doc_id",
-                F.posexplode(T.tokens("text")).alias("pos", "term"))
-    )
+    toks = _doc_tokens(docs)
     # positions are 0-based token offsets, sorted — tf rides as their
     # count; the positional payload is what makes phrase queries an
     # index probe instead of a corpus scan
@@ -87,9 +94,12 @@ def write_text_index(docs: DataFrame, path: str,
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
 
 
+# The schemas the writers fix. Reads declare them instead of inferring
+# them: inference costs one Spark job per relation per query.
 POSTINGS_SCHEMA = ("term string, doc_id bigint, tf int, "
                    "positions array<int>, bucket int")
 DOCLENS_SCHEMA = "doc_id bigint, dl bigint"
+STATS_SCHEMA = "n_docs bigint, total_tokens bigint, n_buckets int"
 
 
 def read_text_index(spark: SparkSession, path: str):
@@ -97,26 +107,36 @@ def read_text_index(spark: SparkSession, path: str):
 
     Stats is read FIRST: an index written over a corpus with zero
     tokenized docs has no postings part files at all (partitionBy
-    writes nothing for an empty frame), so reading postings before
-    checking n_docs would die in schema inference — an empty index
-    instead round-trips as typed empty frames."""
-    stats = spark.read.parquet(f"{path}/stats").first()
+    writes nothing for an empty frame), so it round-trips as typed
+    empty frames. The stats read is the only job here: the three
+    relations are read under their declared schemas. A pre-r6 store's stats row
+    reads n_buckets as NULL (see stored_n_buckets)."""
+    read = spark.read.schema
+    stats = read(STATS_SCHEMA).parquet(f"{path}/stats").first()
     if stats is None or not stats["n_docs"]:
         return (spark.createDataFrame([], POSTINGS_SCHEMA),
                 spark.createDataFrame([], DOCLENS_SCHEMA), stats)
     return (
-        spark.read.parquet(f"{path}/postings"),
-        spark.read.parquet(f"{path}/doclens"),
+        read(POSTINGS_SCHEMA).parquet(f"{path}/postings"),
+        read(DOCLENS_SCHEMA).parquet(f"{path}/doclens"),
         stats,
     )
+
+
+def _query_buckets(terms, n_buckets: int):
+    """Partition filter on the terms' bucket directories: a literal IN
+    list of _term_bucket expressions, which Spark constant-folds into a
+    static PartitionFilter — the pruned directories are fixed at
+    planning time without running a job."""
+    return F.col("bucket").isin(
+        [_term_bucket(F.lit(t), n_buckets) for t in terms])
 
 
 def stored_n_buckets(stats, fallback: int | None = None) -> int:
     """Bucket count a text index was written with: from the stats row
     (self-describing stores), else ``fallback``, else the module
     default — pre-r6 stores carry no n_buckets column."""
-    if stats is not None and "n_buckets" in stats.__fields__ \
-            and stats["n_buckets"] is not None:
+    if stats is not None and stats["n_buckets"] is not None:
         return int(stats["n_buckets"])
     return N_TERM_BUCKETS if fallback is None else fallback
 
@@ -127,12 +147,14 @@ def bm25_topk_indexed(spark: SparkSession, path: str,
                       b: float = BM25_B,
                       n_buckets: int | None = None) -> DataFrame:
     """bm25_search against a persisted index: the postings scan carries
-    a bucket partition filter (only the query terms' directories are
-    read) plus the term equality filter; df comes from the pruned
-    postings themselves. Row-identical to ``textops.bm25_search`` on
-    the same corpus and parameters (same expression chain, same
-    string→decimal exact sum), so it shares that operator's oracle.
-    ``n_buckets`` defaults to the value recorded in the store's stats
+    a constant-folded bucket partition filter (only the query terms'
+    directories are read) plus the term equality filter; df comes from
+    the pruned postings themselves. The one planning job is the stats
+    read (plus Spark's parallel listing of the bucket directories on
+    stores with more than 32 of them). Row-identical to
+    ``textops.bm25_search`` on the same corpus and parameters (same
+    expression chain, same string→decimal exact sum), so it shares
+    that operator's oracle. ``n_buckets`` defaults to the value recorded in the store's stats
     row; pass it only for pre-r6 stores written with a non-default
     count."""
     if k > BM25_MAX_K:
@@ -148,14 +170,9 @@ def bm25_topk_indexed(spark: SparkSession, path: str,
             [], "rank int, doc_id long, n_hits long, score double")
     n_buckets = stored_n_buckets(stats, n_buckets)
     avgdl = stats["total_tokens"] / stats["n_docs"]
-    buckets = [
-        r["b"] for r in
-        spark.createDataFrame([(q,) for q in query], "term string")
-        .select(_term_bucket(F.col("term"), n_buckets).alias("b"))
-        .distinct().collect()
-    ]
     tf = postings.filter(
-        F.col("bucket").isin(buckets) & F.col("term").isin(list(query)))
+        _query_buckets(set(query), n_buckets)
+        & F.col("term").isin(list(query)))
     df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     k11, one_minus_b = k1 + 1.0, 1.0 - b
     idf = ((F.lit(n_docs) - F.col("df")).cast("double") + 0.5) \
@@ -212,14 +229,8 @@ def phrase_topk_indexed(spark: SparkSession, path: str,
         raise ValueError(f"k={k} exceeds BM25_MAX_K={BM25_MAX_K}")
     postings, doclens, stats = read_text_index(spark, path)
     n_buckets = stored_n_buckets(stats, n_buckets)
-    buckets = [
-        r["b"] for r in
-        spark.createDataFrame([(q,) for q in set(phrase)], "term string")
-        .select(_term_bucket(F.col("term"), n_buckets).alias("b"))
-        .distinct().collect()
-    ]
     pruned = postings.filter(
-        F.col("bucket").isin(buckets)
+        _query_buckets(set(phrase), n_buckets)
         & F.col("term").isin(list(set(phrase))))
     # one side per phrase slot; a term repeated in the phrase reuses
     # its (single) posting row per doc under a different alias
@@ -287,11 +298,7 @@ def append_text_index(docs_new: DataFrame, path: str) -> None:
             f"{path}; incremental appends require fresh ids (re-crawls "
             "of existing docs need corpus_delta + rebuild of affected "
             "docs, not a blind append)")
-    toks = (
-        docs_new.filter(F.col("doc_id").isNotNull())
-        .select("doc_id",
-                F.posexplode(T.tokens("text")).alias("pos", "term"))
-    )
+    toks = _doc_tokens(docs_new)
     tf_new = toks.groupBy("term", "doc_id").agg(
         F.array_sort(F.collect_list("pos")).alias("positions"),
     ).select("term", "doc_id", F.size("positions").alias("tf"),

@@ -970,8 +970,12 @@ def bm25_search_oracle(query: tuple[str, ...] = BM25_QUERY,
         CROSS JOIN stats s
     ),
     per_doc AS (
+        -- DECIMAL→DOUBLE in DuckDB rounds twice (hugeint→double, then
+        -- ÷10^15) once the unscaled sum passes 2^53; the VARCHAR parse
+        -- is correctly rounded, as Spark's decimal→double cast is
         SELECT doc_id, COUNT(*) AS n_hits,
-               CAST(SUM(CAST(CAST(score_t AS VARCHAR) AS DECIMAL(28,15)))
+               CAST(CAST(SUM(CAST(CAST(score_t AS VARCHAR)
+                                  AS DECIMAL(28,15))) AS VARCHAR)
                     AS DOUBLE) AS score
         FROM scored GROUP BY doc_id
     )

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -486,7 +487,12 @@ def validate_ivf_index(spark: SparkSession, path: str) -> DataFrame:
         _ivf_cell_udf, read_ivf_index,
     )
 
-    entries, cent = read_ivf_index(spark, path)
+    try:
+        entries, cent = read_ivf_index(spark, path)
+    except ValueError:
+        # cells not 0..n-1: the centroids check below reports it, and
+        # no re-assignment is possible without a cell-ordered matrix
+        entries, cent = spark.read.parquet(f"{path}/entries"), np.zeros(0)
     n_cells = int(cent.shape[0]) if cent.size else 0
     crows = spark.read.parquet(f"{path}/centroids")
     cstats = crows.agg(

@@ -154,12 +154,10 @@ def stream_ivf_topk(spark: SparkSession, queries_parquet_dir: str,
         .option("maxFilesPerTrigger", 1)
         .parquet(queries_parquet_dir)
     )
-    qb = stream.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.explode(S._ivf_probe_udf(cent, probe_n)(F.col(vec_col)))
-        .alias("cell"),
-    ).withColumn("cell", F.col("cell").cast("int"))
+    qb = S._ivf_probe(
+        stream.select(F.col(id_col).alias("query_id"),
+                      F.col(vec_col).alias("q_vec")),
+        cent, probe_n)
     scored = (
         qb.join(entries, "cell")
         .filter(F.col(id_col) != F.col("query_id"))

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from resin_spark.io import load_tables
 from resin_spark.operators import similarity
+from tests.plan_metrics import scan_metrics
 
 SF = "/root/testdata/sf0.001"
 
@@ -292,6 +293,19 @@ def test_ivf_indexed_equals_in_memory_and_prunes(spark, tmp_path):
     assert "PartitionFilters: [cell" in plan \
         or "cell#" in plan.split("PartitionFilters")[1][:120], plan[:3000]
 
+    # the cell filter is dynamic (planned from the broadcast probe side,
+    # no driver collect) and it really prunes: the lean probe reads
+    # fewer entry files than the complete one
+    files = {}
+    for n_probe in (4, 64):
+        df = similarity.ivf_topk_indexed(entries, cent, qs, n_probe=n_probe)
+        df.collect()
+        (scan,) = scan_metrics(df, "/entries")
+        assert "dynamicpruningexpression(cell" in scan["partition_filters"], \
+            scan["partition_filters"]
+        files[n_probe] = scan["number of files read"]
+    assert files[4] < files[64], files
+
 
 @pytest.mark.full_suite
 def test_append_ivf_index_equals_assign_union_and_validates(spark, tmp_path):
@@ -451,3 +465,50 @@ def test_probe_dims_memo_is_per_plan(spark):
     assert similarity._probe_dims(emb, "embedding") == wide  # cached hit
     key = (emb.semanticHash(), "embedding")
     assert similarity._DIMS_CACHE.get(key) == wide
+
+
+def test_read_ivf_index_refuses_cell_gaps(spark, tmp_path):
+    """Row i of the centroid matrix is cell i: a store whose cells skip
+    a number must raise, not shift every later centroid down a row."""
+    path = str(tmp_path / "ivf_gap")
+    spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (3, [-1.0, 0.0])],
+        similarity.IVF_CENTROIDS_SCHEMA,
+    ).write.parquet(f"{path}/centroids")
+    with pytest.raises(ValueError, match="not 0..n-1"):
+        similarity.read_ivf_index(spark, path)
+
+
+def test_read_pq_index_refuses_empty_codebooks(spark, tmp_path):
+    path = str(tmp_path / "pq_empty")
+    spark.createDataFrame([], similarity.PQ_CODEBOOKS_SCHEMA) \
+        .write.parquet(f"{path}/codebooks")
+    with pytest.raises(ValueError, match="pq_empty: empty PQ codebook"):
+        similarity.read_pq_index(spark, path)
+
+
+def test_read_pq_index_refuses_missing_codebook_row(spark, tmp_path):
+    """A missing (m, c) row used to leave a zero centroid in the
+    codebook tensor and score every code that names it against 0."""
+    path = str(tmp_path / "pq_hole")
+    rows = [(m, c, [float(m), float(c)]) for m in range(2) for c in range(2)
+            if (m, c) != (1, 0)]
+    spark.createDataFrame(rows, similarity.PQ_CODEBOOKS_SCHEMA) \
+        .write.parquet(f"{path}/codebooks")
+    with pytest.raises(ValueError, match="pq_hole: PQ codebooks do not fill"):
+        similarity.read_pq_index(spark, path)
+
+
+def test_validate_ivf_index_reports_cell_gaps(spark, tmp_path):
+    """The validator keeps its report shape on a gapped store: the
+    centroids check fails instead of the read raising through it."""
+    from resin_spark.operators import validate
+
+    emb = load_tables(spark, SF)["embeddings"]
+    path = str(tmp_path / "ivf_vgap")
+    similarity.write_ivf_index(emb, path, n_cells=4)
+    cent = spark.read.parquet(f"{path}/centroids").filter("cell != 1")
+    cent.localCheckpoint().write.mode("overwrite").parquet(f"{path}/centroids")
+    res = {r["check"]: r["ok"]
+           for r in validate.validate_ivf_index(spark, path).collect()}
+    assert res["centroids"] is False

@@ -14,6 +14,7 @@ from resin_spark.io import load_tables
 from resin_spark.operators import textindex as ti
 from resin_spark.operators import textops as tx
 from resin_spark.operators import validate
+from tests.plan_metrics import scan_metrics
 
 SF = "/root/testdata/sf0.001"
 
@@ -45,6 +46,16 @@ def test_indexed_bm25_prunes_to_query_buckets(spark, index_dir):
     scan_line = next(ln for ln in plan.splitlines()
                      if "Scan parquet" in ln and "postings" in ln)
     assert scan_line  # postings scan exists
+    # and at run time every postings scan opens at most the query
+    # terms' distinct bucket directories
+    df.collect()
+    n_query_buckets = len(set(spark.range(1).select(
+        *[ti._term_bucket(F.lit(t)) for t in tx.BM25_QUERY]).first()))
+    scans = scan_metrics(df, "/postings")
+    assert scans
+    for scan in scans:
+        assert 0 < scan["number of partitions read"] <= n_query_buckets, \
+            (scan, n_query_buckets)
 
 
 def test_text_index_validator_roundtrip_and_corruption(spark, tmp_path):
@@ -256,3 +267,27 @@ def test_append_rewrites_only_touched_buckets(spark, tmp_path):
         "untouched bucket dirs were rewritten")
     for d in touched:
         assert after.get(d) != before.get(d)
+
+
+def test_bm25_exact_sum_matches_oracle_past_2_pow_53(spark, tmp_path):
+    """A per-doc score whose decimal(28,15) sum has an unscaled value
+    above 2^53 (any score above ~9.007): DuckDB's DECIMAL→DOUBLE cast
+    rounds twice (hugeint→double, then ÷10^15) and used to land one ulp
+    off (9.028604786923529 vs 9.028604786923527). The oracle now goes
+    DECIMAL→VARCHAR→DOUBLE, a correctly rounded parse, which is what
+    Spark's cast already gives — both paths must match it exactly."""
+    import duckdb
+
+    docs = spark.createDataFrame(
+        [(1, "x")] + [(i, "a b c d") for i in range(2, 11)],
+        "doc_id long, text string")
+    ti.write_text_index(docs, str(tmp_path / "idx"))
+    query = ("x",)
+    direct = [tuple(r) for r in tx.bm25_search({"documents": docs},
+                                               query).collect()]
+    assert direct == [(1, 1, 1, 9.028604786923527)]
+    indexed = ti.bm25_topk_indexed(spark, str(tmp_path / "idx"), query)
+    assert [tuple(r) for r in indexed.collect()] == direct
+    con = duckdb.connect()
+    con.register("documents", docs.toPandas())
+    assert con.execute(tx.bm25_search_oracle(query)).fetchall() == direct
