@@ -82,3 +82,16 @@ def davg_sql(expr: str, scale: int = 2, precision: int = 18) -> str:
         f"CAST(SUM(CAST(({expr}) AS DECIMAL({precision},{scale}))) AS DOUBLE)"
         f" / COUNT({expr})"
     )
+
+
+def str_dsum_sql(expr: str) -> str:
+    """DuckDB twin of the string→decimal(28,15) exact sum,
+    ``F.sum(x.cast("string").cast("decimal(28,15)")).cast("double")``:
+    each double enters through its shortest decimal string, the sum is
+    exact, and the result leaves DECIMAL→VARCHAR→DOUBLE — a correctly
+    rounded parse, as Spark's decimal→double cast is. DuckDB's direct
+    DECIMAL→DOUBLE cast rounds twice (hugeint→double, then ÷10^15) once
+    the unscaled sum passes 2^53, i.e. any sum above ~9.007, and lands
+    an ulp off."""
+    return (f"CAST(CAST(SUM(CAST(CAST(({expr}) AS VARCHAR) AS DECIMAL(28,15)))"
+            f" AS VARCHAR) AS DOUBLE)")

@@ -33,8 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
-from resin_spark.functions.ckpt import opt_checkpoint
-from resin_spark.functions import text as T
+from resin_spark.functions import exact, text as T
 from resin_spark.functions import vectors as V
 
 MERSENNE_P = (1 << 61) - 1
@@ -66,24 +65,17 @@ def exact_dedup_oracle() -> str:
 
 # --- shared shingles ---------------------------------------------------------
 
-def shingles(docs: DataFrame, n: int = 3, text_col: str = "text",
-             id_col: str = "doc_id",
+def shingles(docs: DataFrame, n: int = 3,
              base: DataFrame | None = None) -> DataFrame:
     """(doc_id, shingle) with distinct word-n-gram shingles per doc.
 
     Tokenisation is projected once before the window transform so the
     regex tokenizer isn't re-evaluated per reference in the filter and
-    gram expressions. ``base`` (r12) optionally reuses a caller-cached
-    (doc_id, tk) tokenize; only valid with the default columns."""
-    if base is not None:
-        assert text_col == "text" and id_col == "doc_id"
-        base = base.select("doc_id", "tk").filter(F.size("tk") >= n)
-    else:
-        base = (
-            docs.select(F.col(id_col).alias("doc_id"),
-                        T.tokens(text_col).alias("tk"))
-            .filter(F.size("tk") >= n)
-        )
+    gram expressions. The tokens come from ``base``, a
+    :func:`~resin_spark.functions.text.card_base` relation (a card's
+    shared one, or built lazily over ``docs``)."""
+    base = (base or T.card_base(docs)).select("doc_id", "tk").filter(
+        F.size("tk") >= n)
     grams = F.transform(
         F.sequence(F.lit(0), F.size("tk") - n),
         lambda i: F.concat_ws(
@@ -129,6 +121,7 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, tau: float = 0.5,
     # (p < 1e-10 at 10^9 distinct shingles). The canonical rarest-first
     # order is (df, hash) — any total order shared by all docs
     # satisfies the prefix lemma.
+    base = base or T.card_base(docs)
     sh = shingles(docs, n, base=base).select(
         "doc_id", F.xxhash64("shingle").alias("h"))
     dfreq = sh.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
@@ -301,8 +294,7 @@ def shingle_hashes_from_tokens(tk_col: str, n: int = 3):
     ).otherwise(F.array().cast("array<long>"))
 
 
-def shingle_hash_sets(docs: DataFrame, n: int = 3, text_col: str = "text",
-                      id_col: str = "doc_id",
+def shingle_hash_sets(docs: DataFrame, n: int = 3,
                       base: DataFrame | None = None) -> DataFrame:
     """(doc_id, hashes array<long>) — each doc's DISTINCT hashed shingle
     set, computed ROW-LOCALLY (r11): the set is a function of the row's
@@ -318,16 +310,10 @@ def shingle_hash_sets(docs: DataFrame, n: int = 3, text_col: str = "text",
     (The RESIN_NOROWLOCAL legacy-explode A/B shape was removed after
     the r11 measurement round — ADVICE r11: it silently changed
     null-doc_id semantics while claiming to be measurement-only; the
-    A/B evidence lives in OPTIMIZATION_r11.md.)"""
-    if base is not None:
-        # shared card base (r12): cached (doc_id, tk), default columns.
-        assert text_col == "text" and id_col == "doc_id"
-        src = base.select("doc_id", "tk")
-    else:
-        src = docs.select(F.col(id_col).alias("doc_id"),
-                          T.tokens(text_col).alias("tk"))
+    A/B evidence lives in OPTIMIZATION_r11.md.) Tokens come from
+    ``base`` (see :func:`shingles`)."""
     return (
-        src
+        (base or T.card_base(docs)).select("doc_id", "tk")
         # pre-filter on the INPUT size — equivalent to the explode
         # path's drop (hashes is empty iff size(tk) < n) and crucially
         # NOT a filter on the computed array: size(hashes) > 0 would
@@ -449,8 +435,7 @@ def _token_hash60_sql(expr: str) -> str:
     )
 
 
-def simhash(docs: DataFrame, text_col: str = "text",
-            id_col: str = "doc_id",
+def simhash(docs: DataFrame,
             base: DataFrame | None = None) -> DataFrame:
     """60-bit simhash over distinct tokens (weight 1 per token).
 
@@ -464,22 +449,15 @@ def simhash(docs: DataFrame, text_col: str = "text",
     sf0.1: exceptAll 0 both ways; 0.83 s → 0.35 s min, 2.4×).
     (The RESIN_NOROWLOCAL legacy-explode A/B shape was removed after
     the r11 measurement round; evidence in OPTIMIZATION_r11.md and
-    tools/exp_simhash_rowlocal.py.)
+    tools/exp_simhash_rowlocal.py.) Tokens come from ``base`` (see
+    :func:`shingles`).
     """
     powers = F.array(*[F.lit(1 << j).cast("long") for j in range(N_BITS)])
-    if base is not None:
-        # shared card_base (r12): same (doc_id, tokens(text)) columns,
-        # read from the card's cached tokenize instead of a fresh scan.
-        # Only valid with the default text/id columns.
-        assert text_col == "text" and id_col == "doc_id"
-        base = base.select("doc_id", "tk").filter(F.size("tk") >= 1)
-    else:
-        base = (
-            docs.select(F.col(id_col).alias("doc_id"),
-                        T.tokens(text_col).alias("tk"))
-            # explode-drop parity: zero-token docs carry no fingerprint
-            .filter(F.size("tk") >= 1)
-        )
+    base = (
+        (base or T.card_base(docs)).select("doc_id", "tk")
+        # explode-drop parity: zero-token docs carry no fingerprint
+        .filter(F.size("tk") >= 1)
+    )
     hs = F.transform(F.array_distinct(F.col("tk")), _token_hash60)
     counts = F.aggregate(
         hs,
@@ -637,9 +615,9 @@ def dedup_components(docs: DataFrame, max_hamming: int = 3,
     # routing join) and its subtree ends in the wide 60-agg groupBy —
     # the checkpoint-worthy shape (SCALING.md rule; simhash_pairs does
     # the same): materialise once instead of re-fingerprinting the
-    # corpus. Measured 4.5 s → 3.6 s warm at sf0.1. ``base`` (r12) is
-    # the optional shared card tokenize (see card_base); rows are
-    # identical either way.
+    # corpus. Measured 4.5 s → 3.6 s warm at sf0.1. Both the
+    # fingerprints and the document list read the one card_base.
+    base = base or T.card_base(docs)
     sims = simhash(docs, base=base).localCheckpoint(eager=False)
     nodes = (
         sims.groupBy("simhash").agg(F.min("doc_id").alias("rep"))
@@ -778,9 +756,8 @@ def dedup_components(docs: DataFrame, max_hamming: int = 3,
     # the contract is one row per DOCUMENT (the oracle's walk seeds from
     # the documents table): re-join them as their own singleton
     # components (tests/test_edge_docs.py docs 1/2/5).
-    id_src = base if base is not None else docs
     return (
-        id_src.select("doc_id").join(comp, "doc_id", "left")
+        base.select("doc_id").join(comp, "doc_id", "left")
         .select(
             "doc_id",
             F.coalesce("component", "doc_id").alias("component"),
@@ -1183,7 +1160,7 @@ def semantic_dedup_oracle(tau: float = SEMDEDUP_TAU) -> str:
         WHERE {VALID_VECTORS_SQL} AND label IS NOT NULL
     ), dims AS (
         SELECT label, CAST(p.i - 1 AS INT) AS dim,
-               CAST(SUM(CAST(CAST(p.x AS VARCHAR) AS DECIMAL(28,15))) AS DOUBLE)
+               {exact.str_dsum_sql('p.x')}
                    / COUNT(*) AS mean_val
         FROM (
             SELECT label,
@@ -1423,6 +1400,7 @@ def dedup_threshold_curve(docs: DataFrame, n: int = CURVE_N,
     """
     base_tau = min(thresholds)
     spark = docs.sparkSession
+    base = base or T.card_base(docs)
     # NOT checkpointed (r11 A/B, med 19.1 s vs 21.3 s on the nesting
     # card): AQE reuses the identical PPJoin exchange stages across the
     # two grid-aggregate branches at runtime, so a localCheckpoint here
@@ -1441,7 +1419,7 @@ def dedup_threshold_curve(docs: DataFrame, n: int = CURVE_N,
         .groupBy("threshold")
         .agg(F.countDistinct("doc_id").alias("n_docs_in_pairs"))
     )
-    n_docs = (docs.filter(F.col("doc_id").isNotNull())
+    n_docs = (base.filter(F.col("doc_id").isNotNull())
               .agg(F.countDistinct("doc_id")).first()[0])
     zero = F.lit(0).cast("long")
     return (

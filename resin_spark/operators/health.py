@@ -29,8 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from resin_spark.functions.ckpt import opt_checkpoint
 from resin_spark.functions import text as T
+from resin_spark.operators.card import TYPED_ORDER, compose, compose_sql
 
 Tables = dict[str, DataFrame]
 
@@ -241,7 +241,7 @@ def source_overlap_matrix(docs: DataFrame,
     # feeds the per-source sizes AND both sides of the overlap
     # self-join — three branches that would each re-run the shingle
     # explode + distinct. Materialises the deduped shingle keys only.
-    sh = opt_checkpoint(_source_shingles(docs, n), "overlap")
+    sh = _source_shingles(docs, n).localCheckpoint(eager=False)
     sizes = (
         docs.select("source").distinct()
         .join(sh.groupBy("source").agg(F.count(F.lit(1)).alias("n_sh")),
@@ -566,7 +566,7 @@ def vocab_coverage(docs: DataFrame, v: int = COVERAGE_V) -> DataFrame:
         .groupBy("source", "term")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    st = opt_checkpoint(st, "vocab")
+    st = st.localCheckpoint(eager=False)
     vocab = (
         st.groupBy("term").agg(F.sum("cnt").alias("tot"))
         .orderBy(F.col("tot").desc(), "term").limit(v)
@@ -768,8 +768,6 @@ def health_card_typed(t: Tables) -> DataFrame:
     every source relation is already a bounded card; the melt adds a
     row-local explode and a six-way union of card-sized frames.
     """
-    from resin_spark.operators.pipeline import _melt_typed
-
     sections = {
         "encoding": encoding_anomalies_demo(t),
         "overlap": source_overlap_demo(t),
@@ -778,37 +776,7 @@ def health_card_typed(t: Tables) -> DataFrame:
         "coverage": vocab_coverage_demo(t),
         "lengths": length_histogram_demo(t),
     }
-    parts = [_melt_typed(sections[name], name, keys)
-             for name, keys, _, _ in HEALTH_SECTIONS]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.orderBy("section", "metric", "value_num")
-
-
-def _typed_melt_sql(section: str, keys: list[str], nums: list[str],
-                    strs: list[str]) -> str:
-    """The SQL half of :func:`resin_spark.operators.pipeline._melt_typed`
-    for one section CTE named ``card_<section>`` (concat_ws skips NULL
-    key values identically in both engines)."""
-    prefix = ("concat_ws('/', " + ", ".join(
-        f"concat_ws('=', '{k}', CAST({k} AS VARCHAR))" for k in keys)
-        + ")")
-
-    def metric(c):
-        return f"concat_ws('/', {prefix}, '{c}')" if keys else f"'{c}'"
-
-    sels = [
-        f"SELECT '{section}' AS section, {metric(c)} AS metric, "
-        f"CAST({c} AS DOUBLE) AS value_num, "
-        f"CAST(NULL AS VARCHAR) AS value_str FROM card_{section}"
-        for c in nums
-    ] + [
-        f"SELECT '{section}', {metric(c)}, CAST(NULL AS DOUBLE), "
-        f"CAST({c} AS VARCHAR) FROM card_{section}"
-        for c in strs
-    ]
-    return "\nUNION ALL\n".join(sels)
+    return compose(sections, HEALTH_SECTIONS, TYPED_ORDER)
 
 
 def health_card_typed_oracle() -> str:
@@ -822,12 +790,7 @@ def health_card_typed_oracle() -> str:
         "coverage": vocab_coverage_demo_oracle(),
         "lengths": length_histogram_demo_oracle(),
     }
-    ctes = ",\n".join(f"card_{s} AS (\n{bodies[s]}\n)" for s in bodies)
-    melts = "\nUNION ALL\n".join(_typed_melt_sql(*spec)
-                                 for spec in HEALTH_SECTIONS)
-    return (f"WITH {ctes}\n"
-            f"SELECT * FROM (\n{melts}\n)\n"
-            f"ORDER BY section, metric, value_num")
+    return compose_sql(bodies, HEALTH_SECTIONS, TYPED_ORDER)
 
 
 def length_histogram_demo_oracle() -> str:

@@ -12,10 +12,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from resin_spark.functions.ckpt import opt_checkpoint
 from resin_spark.functions import text as T
 import os
 
+from resin_spark.operators.card import (TYPED_ORDER, compose, compose_sql,
+                                        melt)
 from resin_spark.operators.dedup import (_shingles_sql, embedding_dedup_oracle,
                                          embedding_dedup_pairs,
                                          ngram_jaccard_pairs,
@@ -531,24 +532,13 @@ def filter_funnel(t: Tables, min_tokens: int = FUNNEL_MIN_TOKENS,
     exactly how a real pipeline's attrition is reported.
     """
     langs = sorted(T.LANG_PROFILES)
-    if base is not None:
-        # shared card_base (r12): h = md5(text), tk = tokens(text) and
-        # the text-presence flag are carried by the cached base; the
-        # per-doc expressions below are unchanged.
-        d = base.select("doc_id", "has_text", "lang", "h", "tk").select(
-            "*",
-            F.coalesce(F.size("tk").cast("bigint"), F.lit(0)).alias("nt"),
-        )
-    else:
-        tk = T.tokens("text")
-        d = t["documents"].select(
-            "doc_id",
-            F.col("text").isNotNull().alias("has_text"),
-            "lang", tk.alias("tk"), F.md5("text").alias("h"),
-        ).select(
-            "*",
-            F.coalesce(F.size("tk").cast("bigint"), F.lit(0)).alias("nt"),
-        )
+    # h = md5(text), tk = tokens(text) and the text-presence flag come
+    # from the card_base (a card's shared one, or built lazily here)
+    base = base or T.card_base(t["documents"], "lang")
+    d = base.select("doc_id", "has_text", "lang", "h", "tk").select(
+        "*",
+        F.coalesce(F.size("tk").cast("bigint"), F.lit(0)).alias("nt"),
+    )
     for lang in langs:
         d = d.withColumn(f"m_{lang}",
                          T.stopword_count(F.col("tk"), T.LANG_PROFILES[lang]))
@@ -956,15 +946,11 @@ def mixture_plan(docs: DataFrame, budget: int = MIX_BUDGET,
     |sources| groups + a broadcast single-row total; the plan relation
     itself is |sources| rows.
     """
-    # shared card base (r12): size(tk) over the cached tokenize is the
-    # same nt the standalone tokenize computes; the caller pre-applies
-    # any row filter to ``base`` exactly as it would to ``docs``.
-    nt_src = (base.select("source", F.size("tk").cast("long").alias("nt"))
-              if base is not None else
-              docs.select("source",
-                          F.size(T.tokens("text")).cast("long").alias("nt")))
+    # nt = size(tk) over the card_base; a caller that passes ``base``
+    # pre-applies to it any row filter it applied to ``docs``.
+    base = base or T.card_base(docs, "source")
     per = (
-        nt_src
+        base.select("source", F.size("tk").cast("long").alias("nt"))
         .groupBy("source")
         .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("nt").alias("n_tokens"))
         .withColumn("w", F.round(F.sqrt("n_tokens"), 6).cast("decimal(28,6)"))
@@ -997,11 +983,10 @@ def mixture_plan(docs: DataFrame, budget: int = MIX_BUDGET,
 def mixture_plan_demo(t: Tables, base: DataFrame | None = None) -> DataFrame:
     """mixture_plan over the documents table at MIX_BUDGET — the
     driver-checkable form; the library API is mixture_plan(docs,
-    budget). ``base`` (r12) optionally reuses a cached card tokenize."""
-    return mixture_plan(
-        t["documents"].filter(F.col("doc_id").isNotNull()),
-        base=(base.filter(F.col("doc_id").isNotNull())
-              if base is not None else None))
+    budget)."""
+    base = base or T.card_base(t["documents"], "source")
+    return mixture_plan(t["documents"],
+                        base=base.filter(F.col("doc_id").isNotNull()))
 
 
 def mixture_plan_demo_oracle(budget: int = MIX_BUDGET) -> str:
@@ -1068,26 +1053,19 @@ def source_divergence(docs: DataFrame,
     marginals, one join back on tok (Zipf-skewed — AQE territory),
     |sources| output rows. The NB model-build shape.
     """
-    if base is not None:
-        # shared card base (r12): same filters via the precomputed
-        # has_text flag; tk is the cached tokens(text).
-        toks = (
-            base.filter(F.col("doc_id").isNotNull() & F.col("has_text"))
-            .select("source", F.explode("tk").alias("tok"))
-        )
-    else:
-        toks = (
-            docs.filter(F.col("doc_id").isNotNull()
-                        & F.col("text").isNotNull())
-            .select("source", F.explode(T.tokens("text")).alias("tok"))
-        )
+    base = base or T.card_base(docs, "source")
+    toks = (
+        base.filter(F.col("doc_id").isNotNull() & F.col("has_text"))
+        .select("source", F.explode("tk").alias("tok"))
+    )
     # localCheckpoint (r11): the (source, tok) count frame feeds the
     # per-source totals, the corpus marginals AND the final KL join —
     # three independent branches that would each re-run the token
     # explode + count shuffle. Vocabulary-sized materialisation.
-    st = opt_checkpoint(
-        toks.groupBy("source", "tok").agg(F.count(F.lit(1)).alias("c_st")),
-        "div")
+    st = (
+        toks.groupBy("source", "tok").agg(F.count(F.lit(1)).alias("c_st"))
+        .localCheckpoint(eager=False)
+    )
     s_tot = st.groupBy("source").agg(
         F.sum("c_st").alias("n_s"),
         F.count(F.lit(1)).alias("n_distinct"))
@@ -1194,19 +1172,13 @@ def apply_mixture(docs: DataFrame, budget: int = MIX_BUDGET,
     # excluded from both sides, or their token mass would deflate every
     # source's sampling_rate relative to what materialises (review r6).
     # ``plan`` lets a caller reuse one mixture_plan across plan+execute.
-    docs = docs.filter(F.col("doc_id").isNotNull())
+    base = (base or T.card_base(docs, "source")).filter(
+        F.col("doc_id").isNotNull())
     if plan is None:
-        plan = mixture_plan(docs, budget, base=(
-            base.filter(F.col("doc_id").isNotNull())
-            if base is not None else None))
+        plan = mixture_plan(docs, budget, base=base)
     plan = plan.select("source", "sampling_rate")
-    # the copy count needs only (doc_id, source): read them from the
-    # cached card base when given (r12), the docs scan otherwise
-    id_src = (base.filter(F.col("doc_id").isNotNull())
-              .select("doc_id", "source")
-              if base is not None else docs)
     return (
-        id_src
+        base.select("doc_id", "source")
         .join(F.broadcast(plan), "source", "left")
         .select(
             "doc_id", "source",
@@ -1224,19 +1196,16 @@ def apply_mixture_demo(t: Tables, budget: int = MIX_BUDGET,
     realization_ratio). The driver-checkable rollup — the per-doc
     relation is the library surface. ``plan`` (r11) optionally reuses a
     precomputed mixture_plan relation (the melt shares one plan across
-    its mixture + mixture_applied sections); default self-contained."""
-    docs = t["documents"].filter(F.col("doc_id").isNotNull())
-    fbase = (base.filter(F.col("doc_id").isNotNull())
-             if base is not None else None)
+    its mixture + mixture_applied sections)."""
+    docs = t["documents"]
+    base = (base or T.card_base(docs, "source")).filter(
+        F.col("doc_id").isNotNull())
     # ONE mixture_plan serves both the executor and the accounting join
     # (it was computed twice before — two identical corpus scans)
-    full_plan = (mixture_plan(docs, budget, base=fbase)
+    full_plan = (mixture_plan(docs, budget, base=base)
                  if plan is None else plan)
-    copies = apply_mixture(docs, budget, plan=full_plan, base=fbase)
-    toks = (fbase.select("doc_id", F.size("tk").cast("long").alias("nt"))
-            if fbase is not None else
-            docs.select("doc_id",
-                        F.size(T.tokens("text")).cast("long").alias("nt")))
+    copies = apply_mixture(docs, budget, plan=full_plan, base=base)
+    toks = base.select("doc_id", F.size("tk").cast("long").alias("nt"))
     plan = full_plan.select("source", "planned_tokens")
     per = (
         copies.join(toks, "doc_id")
@@ -1351,10 +1320,9 @@ def chunk_documents(docs: DataFrame, chunk_tokens: int = CHUNK_TOKENS,
             f"overlap={overlap} must be smaller than "
             f"chunk_tokens={chunk_tokens} (the window must advance)")
     step = chunk_tokens - overlap
-    tokenized = (base.select("doc_id", "tk") if base is not None else
-                 docs.select("doc_id", T.tokens("text").alias("tk")))
     base = (
-        tokenized.filter(F.col("doc_id").isNotNull())
+        (base or T.card_base(docs)).select("doc_id", "tk")
+        .filter(F.col("doc_id").isNotNull())
         .withColumn("n", F.size("tk"))
         .filter(F.col("n") > 0)
     )
@@ -1486,8 +1454,8 @@ def dataset_split(docs: DataFrame,
     onto |sources|×3 groups; the share window partitions those bounded
     groups only — never the corpus.
     """
-    src = base if base is not None else docs
-    d = src.filter(F.col("doc_id").isNotNull()).select(
+    base = base or T.card_base(docs, "source", "n_chars")
+    d = base.filter(F.col("doc_id").isNotNull()).select(
         "source",
         split_of(F.col("doc_id")).alias("split"),
         F.coalesce(F.col("n_chars").cast("long"), F.lit(0)).alias("nc"),
@@ -1930,19 +1898,13 @@ def split_governance_card(t: Tables,
                                                    pairs=embedding_pairs),
         "perplexity_curve": perplexity_threshold_curve(t),
     }
-    parts = [_melt_typed(sections[name], name, keys)
-             for name, keys, _, _ in GOV_SECTIONS]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.orderBy("section", "metric", "value_num")
+    return compose(sections, GOV_SECTIONS, TYPED_ORDER)
 
 
 def split_governance_card_oracle() -> str:
     """One SQL statement nesting the five governance demos' oracle CTEs
     and melting them with the same metric-name scheme as the engine
-    card (the health_card_typed machinery, shared)."""
-    from resin_spark.operators.health import _typed_melt_sql
+    card."""
     from resin_spark.operators.traindata import (
         perplexity_threshold_curve_oracle)
 
@@ -1953,15 +1915,14 @@ def split_governance_card_oracle() -> str:
         "semantic_leakage": semantic_split_leakage_oracle(),
         "perplexity_curve": perplexity_threshold_curve_oracle(),
     }
-    ctes = ",\n".join(f"card_{s} AS (\n{bodies[s]}\n)" for s in bodies)
-    melts = "\nUNION ALL\n".join(_typed_melt_sql(*spec)
-                                 for spec in GOV_SECTIONS)
-    return (f"WITH RECURSIVE {ctes}\n"
-            f"SELECT * FROM (\n{melts}\n)\n"
-            f"ORDER BY section, metric, value_num")
+    return compose_sql(bodies, GOV_SECTIONS, TYPED_ORDER)
 
 
 # --- curation_tuning_card: one slot for the ENTIRE remaining staged queue -------
+
+# The columns a card's shared card_base passes through — every column
+# any dataset-card or curation-card section reads besides the analysis.
+CARD_BASE_COLS = ("lang", "source", "n_chars")
 
 # Lockstep layout shared by curation_tuning_card and its oracle:
 # section -> (key cols, numeric cols, string cols).
@@ -2013,12 +1974,9 @@ def curation_tuning_card(t: Tables) -> DataFrame:
     the melt adds a row-local explode and a nine-way union.
     """
     from resin_spark.operators.dedup import dedup_threshold_curve_demo
-    from resin_spark.operators.textops import search_facets, search_snippets
+    from resin_spark.operators.textops import (bm25_scores, search_facets,
+                                               search_snippets)
     from resin_spark.operators.traindata import cdc_chunk_stats, lang_confusion
-
-    from resin_spark.operators.textops import bm25_scores
-
-    from resin_spark.operators.traindata import card_base
 
     docs = t["documents"]
     # Shared section inputs (r11, the split_governance_card pairs=
@@ -2029,12 +1987,10 @@ def curation_tuning_card(t: Tables) -> DataFrame:
     # and localCheckpointed instead of re-planned per section. Row
     # identity is unchanged (section-equality pins stay the license).
     #
-    # r12 (the dataset_card precedent, commit bd9d9f4): every section
-    # tokenized the corpus independently — nine scan+tokenize subtrees
-    # whose concurrent materialisation convoys on the same blocks. ONE
-    # eager card_base feeds all of them; each member applies its own
-    # filters on the unfiltered base, so section rows are identical.
-    base = card_base(docs).localCheckpoint(eager=True)
+    # ONE eager card_base feeds all nine sections (see
+    # _dataset_card_sections); each member applies its own filters on
+    # the unfiltered base.
+    base = T.card_base(docs, *CARD_BASE_COLS).localCheckpoint(eager=True)
     plan = mixture_plan_demo(t, base=base).localCheckpoint(eager=False)
     scores = bm25_scores(t, base=base).localCheckpoint(eager=False)
     sections = {
@@ -2048,20 +2004,13 @@ def curation_tuning_card(t: Tables) -> DataFrame:
         "facets": search_facets(t, scores=scores, base=base),
         "chunks": chunk_documents_demo(t, base=base),
     }
-    parts = [_melt_typed(sections[name], name, keys)
-             for name, keys, _, _ in TUNE_SECTIONS]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.orderBy("section", "metric", "value_num", "value_str")
+    return compose(sections, TUNE_SECTIONS, TYPED_ORDER + ["value_str"])
 
 
 def curation_tuning_card_oracle() -> str:
     """One SQL statement nesting the nine members' oracle CTEs and
-    melting them with the same metric-name scheme (the
-    health_card_typed machinery, shared)."""
+    melting them with the same metric-name scheme."""
     from resin_spark.operators.dedup import dedup_threshold_curve_oracle
-    from resin_spark.operators.health import _typed_melt_sql
     from resin_spark.operators.textops import (search_facets_oracle,
                                                search_snippets_oracle)
     from resin_spark.operators.traindata import (cdc_chunk_stats_oracle,
@@ -2078,37 +2027,30 @@ def curation_tuning_card_oracle() -> str:
         "facets": search_facets_oracle(),
         "chunks": chunk_documents_oracle(),
     }
-    ctes = ",\n".join(f"card_{s} AS (\n{bodies[s]}\n)" for s in bodies)
-    melts = "\nUNION ALL\n".join(_typed_melt_sql(*spec)
-                                 for spec in TUNE_SECTIONS)
-    return (f"WITH {ctes}\n"
-            f"SELECT * FROM (\n{melts}\n)\n"
-            f"ORDER BY section, metric, value_num, value_str")
+    return compose_sql(bodies, TUNE_SECTIONS, TYPED_ORDER + ["value_str"])
 
 
 # --- dataset_card: the one-page release data sheet ------------------------------
 
-def _melt(df: DataFrame, section: str, key_cols: list[str]) -> DataFrame:
-    """(section, metric, value) rows from a small card relation:
-    metric = '<non-key col>' prefixed by the row's key values, value =
-    the cell as a string. Runs on CARD relations only (|rows| bounded
-    by sources/langs/stages/buckets) — the melt explode is trivial."""
-    value_cols = [c for c in df.columns if c not in key_cols]
-    prefix = (F.concat_ws("/", *[
-        F.concat_ws("=", F.lit(k), F.col(k).cast("string"))
-        for k in key_cols
-    ]) if key_cols else F.lit(None))
-    pairs = F.array(*[
-        F.struct(F.lit(c).alias("m"), F.col(c).cast("string").alias("v"))
-        for c in value_cols
-    ])
-    metric = (F.concat_ws("/", prefix, F.col("kv.m")) if key_cols
-              else F.col("kv.m"))
-    return df.select(F.explode(pairs).alias("kv"), *key_cols).select(
-        F.lit(section).alias("section"),
-        metric.alias("metric"),
-        F.col("kv.v").alias("value"),
-    )
+def _dataset_card_sections(t: Tables) -> dict[str, DataFrame]:
+    """The five release-card sections, all over ONE card_base: one scan
+    and one tokenize, materialised EAGERLY so the card's many
+    concurrent broadcast-subtree jobs read cached blocks instead of
+    racing to compute the same lazy lineage (the measured lock-convoy —
+    see card_base). Construction is eager, same class as
+    session_overlap's documented probe."""
+    from resin_spark.operators.dedup import dup_cluster_histogram
+    from resin_spark.operators.traindata import corpus_stats, lang_stats
+
+    docs = t["documents"]
+    base = T.card_base(docs, *CARD_BASE_COLS).localCheckpoint(eager=True)
+    return {
+        "corpus": corpus_stats(t, base=base),
+        "languages": lang_stats(t, base=base),
+        "funnel": filter_funnel(t, base=base),
+        "duplication": dup_cluster_histogram(docs, base=base),
+        "splits": dataset_split(docs, base=base),
+    }
 
 
 def dataset_card(t: Tables) -> DataFrame:
@@ -2124,64 +2066,8 @@ def dataset_card(t: Tables) -> DataFrame:
     Scale: every source relation is already a bounded card; the melt
     adds a trivial row-local explode and a union of five small frames.
     """
-    from resin_spark.operators.dedup import dup_cluster_histogram
-    from resin_spark.operators.traindata import (card_base, corpus_stats,
-                                                 lang_stats)
-
-    docs = t["documents"]
-    # shared eager tokenize base — see dataset_card_typed (r12)
-    base = card_base(docs).localCheckpoint(eager=True)
-    parts = [
-        _melt(corpus_stats(t, base=base), "corpus", []),
-        _melt(lang_stats(t, base=base), "languages", ["lang"]),
-        _melt(filter_funnel(t, base=base), "funnel", ["stage", "stage_name"]),
-        _melt(dup_cluster_histogram(docs, base=base), "duplication",
-              ["cluster_size"]),
-        _melt(dataset_split(docs, base=base), "splits", ["source", "split"]),
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.orderBy("section", "metric")
-
-
-def _melt_typed(df: DataFrame, section: str, key_cols: list[str]) -> DataFrame:
-    """(section, metric, value_num, value_str) — the machine face of
-    :func:`_melt`. Numeric cells stay DOUBLE instead of being cast to
-    string: float→string formatting is ENGINE-SPECIFIC (Java prints
-    shortest-repr with scientific notation under 1e-3, DuckDB prints
-    plain decimal; %.6f-style formats tie-break differently on x/128
-    dyadics), while the doubles themselves are bit-identical across
-    engines because each cell is the underlying oracle-checked card's
-    value unchanged (bigint→double exact under 2^53). Key columns are
-    strings/bigints only — safe to fold into the metric name."""
-    from pyspark.sql.types import NumericType
-
-    fields = {f.name: f.dataType for f in df.schema.fields}
-    value_cols = [c for c in df.columns if c not in key_cols]
-    prefix = (F.concat_ws("/", *[
-        F.concat_ws("=", F.lit(k), F.col(k).cast("string"))
-        for k in key_cols
-    ]) if key_cols else F.lit(None))
-
-    def cell(c):
-        if isinstance(fields[c], NumericType):
-            return F.struct(F.lit(c).alias("m"),
-                            F.col(c).cast("double").alias("vn"),
-                            F.lit(None).cast("string").alias("vs"))
-        return F.struct(F.lit(c).alias("m"),
-                        F.lit(None).cast("double").alias("vn"),
-                        F.col(c).cast("string").alias("vs"))
-
-    pairs = F.array(*[cell(c) for c in value_cols])
-    metric = (F.concat_ws("/", prefix, F.col("kv.m")) if key_cols
-              else F.col("kv.m"))
-    return df.select(F.explode(pairs).alias("kv"), *key_cols).select(
-        F.lit(section).alias("section"),
-        metric.alias("metric"),
-        F.col("kv.vn").alias("value_num"),
-        F.col("kv.vs").alias("value_str"),
-    )
+    return compose(_dataset_card_sections(t), CARD_SECTIONS,
+                   ["section", "metric"], melt_fn=melt)
 
 
 def dataset_card_typed(t: Tables) -> DataFrame:
@@ -2195,36 +2081,11 @@ def dataset_card_typed(t: Tables) -> DataFrame:
     Scale: identical to dataset_card — five bounded card relations,
     a row-local explode, and a union.
     """
-    from resin_spark.operators.dedup import dup_cluster_histogram
-    from resin_spark.operators.traindata import (card_base, corpus_stats,
-                                                 lang_stats)
-
-    docs = t["documents"]
-    # ONE scan + ONE tokenize for all five sections (r12; the r11
-    # pairs=/scores= subtree-sharing precedent): materialised EAGERLY
-    # so the card's many concurrent broadcast-subtree jobs read cached
-    # blocks instead of racing to compute the same lazy lineage (the
-    # measured lock-convoy — see card_base). Construction is eager,
-    # same class as session_overlap's documented probe.
-    base = card_base(docs).localCheckpoint(eager=True)
-    parts = [
-        _melt_typed(corpus_stats(t, base=base), "corpus", []),
-        _melt_typed(lang_stats(t, base=base), "languages", ["lang"]),
-        _melt_typed(filter_funnel(t, base=base), "funnel",
-                    ["stage", "stage_name"]),
-        _melt_typed(dup_cluster_histogram(docs, base=base), "duplication",
-                    ["cluster_size"]),
-        _melt_typed(dataset_split(docs, base=base), "splits",
-                    ["source", "split"]),
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.orderBy("section", "metric", "value_num")
+    return compose(_dataset_card_sections(t), CARD_SECTIONS, TYPED_ORDER)
 
 
 # lockstep card layout shared by dataset_card_typed and its oracle:
-# section -> (oracle-fn spec, key cols, numeric cols, string cols).
+# section -> (key cols, numeric cols, string cols).
 # Changing any underlying card's columns means changing BOTH the
 # engine relation and this table together.
 CARD_SECTIONS = (
@@ -2246,8 +2107,8 @@ CARD_SECTIONS = (
 
 def dataset_card_typed_oracle() -> str:
     """One SQL statement nesting the five checked cards' oracle CTEs
-    and melting them with the same metric-name scheme as _melt_typed
-    (concat_ws skips NULL key values identically in both engines)."""
+    and melting them with the same metric-name scheme as the engine
+    card."""
     from resin_spark.operators.dedup import dup_cluster_histogram_oracle
     from resin_spark.operators.traindata import (corpus_stats_oracle,
                                                  lang_stats_oracle)
@@ -2259,30 +2120,4 @@ def dataset_card_typed_oracle() -> str:
         "duplication": dup_cluster_histogram_oracle(),
         "splits": dataset_split_demo_oracle(),
     }
-    ctes = ",\n".join(f"card_{s} AS (\n{bodies[s]}\n)" for s in bodies)
-
-    def melt(section, keys, nums, strs):
-        prefix = ("concat_ws('/', " + ", ".join(
-            f"concat_ws('=', '{k}', CAST({k} AS VARCHAR))" for k in keys)
-            + ")")
-
-        def metric(c):
-            return (f"concat_ws('/', {prefix}, '{c}')" if keys
-                    else f"'{c}'")
-
-        sels = [
-            f"SELECT '{section}' AS section, {metric(c)} AS metric, "
-            f"CAST({c} AS DOUBLE) AS value_num, "
-            f"CAST(NULL AS VARCHAR) AS value_str FROM card_{section}"
-            for c in nums
-        ] + [
-            f"SELECT '{section}', {metric(c)}, CAST(NULL AS DOUBLE), "
-            f"CAST({c} AS VARCHAR) FROM card_{section}"
-            for c in strs
-        ]
-        return "\nUNION ALL\n".join(sels)
-
-    melts = "\nUNION ALL\n".join(melt(*spec) for spec in CARD_SECTIONS)
-    return (f"WITH {ctes}\n"
-            f"SELECT * FROM (\n{melts}\n)\n"
-            f"ORDER BY section, metric, value_num")
+    return compose_sql(bodies, CARD_SECTIONS, TYPED_ORDER)

@@ -31,6 +31,7 @@ from pyspark.sql.types import (
     ArrayType, DoubleType, IntegerType, LongType, StructField,
 )
 
+from resin_spark.functions import exact
 from resin_spark.functions import vectors as V
 
 FOLD_ANGLE = 0.55  # GraphOptions.cs defaults
@@ -930,7 +931,7 @@ def label_centroids_oracle() -> str:
     # list range over each vector's actual length
     return f"""
     SELECT label, CAST(p.i - 1 AS INT) AS dim,
-           CAST(SUM(CAST(CAST(p.x AS VARCHAR) AS DECIMAL(28,15))) AS DOUBLE)
+           {exact.str_dsum_sql('p.x')}
                / COUNT(*) AS mean_val
     FROM (
         SELECT label,

@@ -14,7 +14,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from resin_spark.functions import text as T
+from resin_spark.functions import exact, text as T
 
 Tables = dict[str, DataFrame]
 
@@ -833,15 +833,9 @@ def bm25_scores(t: Tables, query: tuple[str, ...] = BM25_QUERY,
         return F.size(F.filter("tk", lambda x: x == q)).alias(f"tf_{i}")
 
     tf_cols = [_tf(i, q) for i, q in enumerate(query)]
-    if base is not None:
-        # shared card base (r12): same (doc_id, tokens(text)) columns
-        # read from a caller-cached tokenize; filters identical below.
-        tokenized = base.select("doc_id", "tk")
-    else:
-        tokenized = t["documents"].select(
-            "doc_id", T.tokens("text").alias("tk"))
     base = (
-        tokenized.filter(F.col("doc_id").isNotNull())
+        (base or T.card_base(t["documents"])).select("doc_id", "tk")
+        .filter(F.col("doc_id").isNotNull())
         .filter(F.size("tk") >= 1)
         .select("doc_id", F.size("tk").alias("dl"), *tf_cols)
     )
@@ -970,13 +964,8 @@ def bm25_search_oracle(query: tuple[str, ...] = BM25_QUERY,
         CROSS JOIN stats s
     ),
     per_doc AS (
-        -- DECIMAL→DOUBLE in DuckDB rounds twice (hugeint→double, then
-        -- ÷10^15) once the unscaled sum passes 2^53; the VARCHAR parse
-        -- is correctly rounded, as Spark's decimal→double cast is
         SELECT doc_id, COUNT(*) AS n_hits,
-               CAST(CAST(SUM(CAST(CAST(score_t AS VARCHAR)
-                                  AS DECIMAL(28,15))) AS VARCHAR)
-                    AS DOUBLE) AS score
+               {exact.str_dsum_sql("score_t")} AS score
         FROM scored GROUP BY doc_id
     )
     SELECT rank, doc_id, n_hits, score
@@ -1123,13 +1112,8 @@ def search_snippets(t: Tables, query: tuple[str, ...] = BM25_QUERY,
     """
     top = bm25_search(t, query, k, scores=scores).select("rank", "doc_id")
     from pyspark.sql.functions import broadcast
-    if base is not None:
-        # shared card base (r12): the k hit docs' tokens come from the
-        # cached tokenize instead of a fresh corpus scan.
-        hits = base.filter(F.col("doc_id").isNotNull()).select("doc_id", "tk")
-    else:
-        hits = (t["documents"].filter(F.col("doc_id").isNotNull())
-                .select("doc_id", T.tokens("text").alias("tk")))
+    hits = ((base or T.card_base(t["documents"]))
+            .filter(F.col("doc_id").isNotNull()).select("doc_id", "tk"))
     base = hits.join(broadcast(top), "doc_id").select("rank", "doc_id", "tk")
     pos = F.array_min(F.filter(
         F.array(*[F.array_position("tk", F.lit(q)) for q in query]),
@@ -1197,10 +1181,10 @@ def search_facets(t: Tables, query: tuple[str, ...] = BM25_QUERY,
     """
     from pyspark.sql.functions import broadcast
     top = bm25_search(t, query, k, scores=scores).select("doc_id")
-    # (source, lang) for the k hits from the cached card base when given
-    hit_src = (base if base is not None else t["documents"])
+    # (source, lang) for the k hits from the card_base
+    base = base or T.card_base(t["documents"], "lang", "source")
     page = (
-        hit_src.filter(F.col("doc_id").isNotNull())
+        base.filter(F.col("doc_id").isNotNull())
         .join(broadcast(top), "doc_id")
         .select("source", "lang")
     )

@@ -43,7 +43,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from resin_spark.functions.ckpt import opt_checkpoint
 from resin_spark.functions import exact, text as T
 from resin_spark.functions import vectors as V
 from resin_spark.operators.dedup import _token_hash60, _token_hash60_sql
@@ -268,7 +267,7 @@ def centroid_assign_oracle() -> str:
         WHERE {VALID_VECTORS_SQL} AND label IS NOT NULL
     ), dims AS (
         SELECT label, CAST(p.i - 1 AS INT) AS dim,
-               CAST(SUM(CAST(CAST(p.x AS VARCHAR) AS DECIMAL(28,15))) AS DOUBLE)
+               {exact.str_dsum_sql('p.x')}
                    / COUNT(*) AS mean_val
         FROM (
             SELECT label,
@@ -489,26 +488,6 @@ def _doc_token_arrays(docs: DataFrame) -> DataFrame:
         docs.filter(F.col("doc_id").isNotNull())
         .select("doc_id", T.tokens("text").alias("tk"))
         .filter(F.size("tk") >= 1)
-    )
-
-
-def card_base(docs: DataFrame) -> DataFrame:
-    """Shared per-doc base for the release-card sections (r12): ONE
-    documents scan + ONE tokenize carrying every column any section
-    needs — UNFILTERED (doc_id/lang/text NULL rows included; each
-    section applies its own filters exactly as its standalone shape
-    does, so section outputs are row-identical). The card materialises
-    this once (eager localCheckpoint) and five sections derive from the
-    cached blocks instead of five independent scan+tokenize subtrees —
-    which also removes the lock-convoy of concurrent broadcast-subtree
-    jobs racing to materialise the same lazy intermediate (r12 stage
-    profile: 32-task stages at ~95% blocked time, executorRunTime 66 s
-    vs 1.1 s CPU)."""
-    return docs.select(
-        "doc_id", "lang", "source", "n_chars",
-        F.col("text").isNotNull().alias("has_text"),
-        F.md5("text").alias("h"),
-        T.tokens("text").alias("tk"),
     )
 
 
@@ -914,12 +893,9 @@ def nb_lang_classify(t: Tables, base: DataFrame | None = None) -> DataFrame:
 
 
 def _nb_base(docs: DataFrame, base: DataFrame | None = None) -> DataFrame:
-    # shared card base (r12): same (doc_id, lang, tokens(text)) columns
-    # read from a caller-cached tokenize; filters identical.
-    src = (base.select("doc_id", "lang", "tk") if base is not None else
-           docs.select("doc_id", "lang", T.tokens("text").alias("tk")))
+    # (doc_id, lang, tk) of the labelled, non-empty docs
     return (
-        src
+        (base or T.card_base(docs, "lang")).select("doc_id", "lang", "tk")
         .filter(F.col("doc_id").isNotNull() & F.col("lang").isNotNull())
         .filter(F.size("tk") >= 1)
     )
@@ -953,9 +929,10 @@ def nb_model_frames(docs: DataFrame, with_counts: bool = False,
     # localCheckpoint (r11): priors feeds both the total aggregate and
     # the cand join — each branch would otherwise re-run the corpus
     # tokenize behind it. |langs| rows materialised.
-    priors = opt_checkpoint(
-        base.groupBy("lang").agg(F.count(F.lit(1)).alias("docs_lang")),
-        "priors")
+    priors = (
+        base.groupBy("lang").agg(F.count(F.lit(1)).alias("docs_lang"))
+        .localCheckpoint(eager=False)
+    )
     total = priors.agg(F.sum("docs_lang").alias("docs_total"))
     cand = (
         priors.join(broadcast(total)).join(n_lang, "lang")
@@ -1422,7 +1399,7 @@ def kmeans_refine_oracle(iters: int = KMEANS_ITERS) -> str:
     def means_cte(src_assign: str, out: str) -> str:
         return f"""{out}_dims AS (
         SELECT a.cell, CAST(p.i - 1 AS INT) AS dim,
-               CAST(SUM(CAST(CAST(p.x AS VARCHAR) AS DECIMAL(28,15))) AS DOUBLE)
+               {exact.str_dsum_sql('p.x')}
                    / COUNT(*) AS mean_val
         FROM (
             SELECT vec_id,
@@ -1452,7 +1429,7 @@ def kmeans_refine_oracle(iters: int = KMEANS_ITERS) -> str:
         WHERE {VALID_VECTORS_SQL} AND label IS NOT NULL
     ), cent0_dims AS (
         SELECT label AS cell, CAST(p.i - 1 AS INT) AS dim,
-               CAST(SUM(CAST(CAST(p.x AS VARCHAR) AS DECIMAL(28,15))) AS DOUBLE)
+               {exact.str_dsum_sql('p.x')}
                    / COUNT(*) AS mean_val
         FROM (
             SELECT label,
@@ -1511,28 +1488,18 @@ def corpus_stats(t: Tables, base: DataFrame | None = None) -> DataFrame:
     IEEE divisions of exact integers; quantiles are order statistics
     picked by exact integer comparison (rn-style cum ≥ p·n).
 
-    ``base`` (r12, the r11 pairs=/scores= precedent): an optional
-    shared :func:`card_base` relation. When given, the token arrays
-    and the language counts derive from it (one cached tokenize for
-    the whole card) instead of fresh documents scans; rows and values
-    are identical (same filters applied on top). Default None keeps
-    the standalone entry self-contained.
+    The token arrays and the language counts derive from ``base``, a
+    :func:`~resin_spark.functions.text.card_base` relation (a card's
+    shared one, or built lazily over the documents table).
     """
-    if base is not None:
-        arrays = (base.filter(F.col("doc_id").isNotNull())
-                  .select("doc_id", "tk").filter(F.size("tk") >= 1))
-        lang_src = base
-    else:
-        arrays = _doc_token_arrays(t["documents"])
-        lang_src = t["documents"]
-    lens = arrays.select("doc_id", F.size("tk").cast("long").alias("n_tok"))
-    if base is None:
-        # localCheckpoint (r11): the per-doc length frame feeds the
-        # length histogram AND the doc totals — two branches that would
-        # each re-run the corpus tokenize. Two scalar columns per doc.
-        # (With a shared base the recompute is a cheap map over cached
-        # blocks — no checkpoint needed.)
-        lens = opt_checkpoint(lens, "lens")
+    base = base or T.card_base(t["documents"], "lang")
+    arrays = (base.filter(F.col("doc_id").isNotNull())
+              .select("doc_id", "tk").filter(F.size("tk") >= 1))
+    # localCheckpoint (r11): the per-doc length frame feeds the length
+    # histogram AND the doc totals — two branches that would each
+    # re-run the corpus tokenize. Two scalar columns per doc.
+    lens = (arrays.select("doc_id", F.size("tk").cast("long").alias("n_tok"))
+            .localCheckpoint(eager=False))
     toks = arrays.select(F.explode("tk").alias("tok"))
     tok_agg = toks.agg(
         F.count(F.lit(1)).alias("n_tokens"),
@@ -1559,7 +1526,7 @@ def corpus_stats(t: Tables, base: DataFrame | None = None) -> DataFrame:
         F.sum("n_tok").alias("sum_tok"),
     )
     langs = (
-        lang_src.filter(F.col("doc_id").isNotNull()
+        base.filter(F.col("doc_id").isNotNull()
                         & F.col("lang").isNotNull())
         .groupBy("lang").agg(F.count(F.lit(1)).alias("c"))
     )
@@ -1670,35 +1637,23 @@ def lang_stats(t: Tables, base: DataFrame | None = None) -> DataFrame:
     Exactness: integer counts, single IEEE divisions, integer-compare
     order statistics — the corpus_stats recipe per group.
     """
-    if base is not None:
-        b = (base.filter(F.col("doc_id").isNotNull()
-                         & F.col("lang").isNotNull())
-             .select("doc_id", "lang", "tk")
-             .filter(F.size("tk") >= 1))
-    else:
-        b = (
-            t["documents"]
-            .filter(F.col("doc_id").isNotNull() & F.col("lang").isNotNull())
-            .select("doc_id", "lang", T.tokens("text").alias("tk"))
-            .filter(F.size("tk") >= 1)
-        )
+    base = base or T.card_base(t["documents"], "lang")
+    b = (base.filter(F.col("doc_id").isNotNull()
+                     & F.col("lang").isNotNull())
+         .select("doc_id", "lang", "tk")
+         .filter(F.size("tk") >= 1))
     # localCheckpoints (r11): lens feeds the histogram, the doc totals
     # and (via doc_agg) the corpus total — three tokenize re-runs
     # without it; tok_agg feeds both the per-lang join and the corpus
     # token total — a token-explode + countDistinct re-run without it.
-    # Materialisations are 2 scalars/doc and |langs| rows. (With a
-    # shared card base the lens recompute is a cheap map over cached
-    # blocks, so its checkpoint is skipped; tok_agg keeps its
-    # checkpoint in both modes — it saves a real aggregation.)
-    lens = b.select("lang", F.size("tk").cast("long").alias("n_tok"))
-    if base is None:
-        lens = opt_checkpoint(lens, "langlens")
+    # Materialisations are 2 scalars/doc and |langs| rows.
+    lens = (b.select("lang", F.size("tk").cast("long").alias("n_tok"))
+            .localCheckpoint(eager=False))
     toks = b.select("lang", F.explode("tk").alias("tok"))
     tok_agg = toks.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_tokens"),
         F.countDistinct("tok").alias("vocab"),
-    )
-    tok_agg = opt_checkpoint(tok_agg, "langtok")
+    ).localCheckpoint(eager=False)
     hist = lens.groupBy("lang", "n_tok").agg(F.count(F.lit(1)).alias("c"))
     wcum = Window.partitionBy("lang").orderBy("n_tok").rowsBetween(
         Window.unboundedPreceding, Window.currentRow)
@@ -1888,7 +1843,7 @@ def embedding_drift_demo_oracle() -> str:
         return f"""
     {name}_dims AS (
         SELECT label, CAST(p.i - 1 AS INT) AS dim,
-               CAST(SUM(CAST(CAST(p.x AS VARCHAR) AS DECIMAL(28,15))) AS DOUBLE)
+               {exact.str_dsum_sql('p.x')}
                    / COUNT(*) AS mean_val
         FROM (
             SELECT label,
@@ -1904,9 +1859,7 @@ def embedding_drift_demo_oracle() -> str:
     ),
     {name}_stats AS (
         SELECT label, COUNT(*) AS n,
-               round(CAST(SUM(CAST(CAST({norm} AS VARCHAR)
-                                   AS DECIMAL(28,15))) AS DOUBLE)
-                     / COUNT(*), 9) AS mean_norm
+               round({exact.str_dsum_sql(norm)} / COUNT(*), 9) AS mean_norm
         FROM {src} GROUP BY label
     )"""
 
@@ -1965,7 +1918,7 @@ def lang_confusion(t: Tables, base: DataFrame | None = None) -> DataFrame:
         .groupBy("true_lang", "pred_lang")
         .agg(F.count(F.lit(1)).alias("n_docs"))
     )
-    per = opt_checkpoint(per, "conf")
+    per = per.localCheckpoint(eager=False)
     tot = per.groupBy("true_lang").agg(F.sum("n_docs").alias("n_true"))
     return (
         per.join(tot, "true_lang")
@@ -2016,14 +1969,10 @@ def cdc_chunks(docs: DataFrame, k: int = CDC_K,
     stats rollup and the streaming classifier
     (streaming/quality.py:stream_cdc_flags)."""
     d = mask + 1
-    # shared card base (r12): the has_text flag mirrors the standalone
-    # text-notnull filter; tk is the cached tokens(text).
-    src = (base.filter(F.col("has_text")).select("doc_id", "tk")
-           if base is not None else
-           docs.filter(F.col("text").isNotNull())
-           .select("doc_id", T.tokens("text").alias("tk")))
     base = (
-        src.filter(F.col("doc_id").isNotNull())
+        (base or T.card_base(docs)).filter(F.col("has_text"))
+        .select("doc_id", "tk")
+        .filter(F.col("doc_id").isNotNull())
         .filter(F.size("tk") >= 1)
     )
     n = F.size("tk")

@@ -811,11 +811,9 @@ def test_melt_doc_ids_never_ride_value_num(spark):
     both engines (hash-green, silently-wrong published id). (a) No
     melt spec may list an id column in its numeric list; (b) the key
     fold carries a >2^53 bigint exactly."""
-    from resin_spark.operators.health import (HEALTH_SECTIONS,
-                                              _typed_melt_sql)
-    from resin_spark.operators.pipeline import (GOV_SECTIONS,
-                                                TUNE_SECTIONS,
-                                                _melt_typed)
+    from resin_spark.operators.card import melt_typed, melt_typed_sql
+    from resin_spark.operators.health import HEALTH_SECTIONS
+    from resin_spark.operators.pipeline import GOV_SECTIONS, TUNE_SECTIONS
 
     for specs in (TUNE_SECTIONS, GOV_SECTIONS, HEALTH_SECTIONS):
         for section, _keys, nums, _strs in specs:
@@ -826,7 +824,7 @@ def test_melt_doc_ids_never_ride_value_num(spark):
     df = spark.createDataFrame([(1, big, 7, "snip")],
                                "rank bigint, doc_id bigint, pos bigint, "
                                "snippet string")
-    rows = _melt_typed(df, "snippets", ["rank", "doc_id"]).collect()
+    rows = melt_typed(df, "snippets", ["rank", "doc_id"]).collect()
     assert {r["metric"] for r in rows} == {
         f"rank=1/doc_id={big}/pos", f"rank=1/doc_id={big}/snippet"}
 
@@ -834,14 +832,14 @@ def test_melt_doc_ids_never_ride_value_num(spark):
     con = duckdb.connect()
     con.execute(f"CREATE VIEW card_snippets AS SELECT 1 AS rank, "
                 f"{big} AS doc_id, 7 AS pos, 'snip' AS snippet")
-    sql = _typed_melt_sql("snippets", ["rank", "doc_id"], ["pos"],
-                          ["snippet"])
+    sql = melt_typed_sql("snippets", ["rank", "doc_id"], ["pos"],
+                         ["snippet"])
     got = {r[1] for r in con.execute(sql).fetchall()}
     assert got == {f"rank=1/doc_id={big}/pos",
                    f"rank=1/doc_id={big}/snippet"}
 
 
-# --- melt machinery property: _melt_typed == _typed_melt_sql on random frames --
+# --- melt machinery property: melt_typed == melt_typed_sql on random frames ----
 
 try:
     from hypothesis import given, settings
@@ -866,15 +864,15 @@ try:
     @given(rows=_cell_rows)
     @settings(max_examples=12, deadline=None)
     def test_melt_typed_matches_sql_melt(spark, tmp_path_factory, rows):
-        """The melt machinery itself (pipeline._melt_typed vs
-        health._typed_melt_sql) is equivalent on RANDOM frames — NULL
+        """The melt machinery itself (card.melt_typed vs
+        card.melt_typed_sql) is equivalent on RANDOM frames — NULL
         and weird-char key values, NULL numeric/string cells, duplicate
         keys. This is the shared surface under the three composite
         driver entries; the cards' own parity only exercises it on
         their fixed section specs."""
         import duckdb
 
-        from resin_spark.operators.health import _typed_melt_sql
+        from resin_spark.operators.card import melt_typed, melt_typed_sql
 
         d = tmp_path_factory.mktemp("melt")
         df = spark.createDataFrame(
@@ -882,9 +880,9 @@ try:
         path = f"{d}/t.parquet"
         df.coalesce(1).write.mode("overwrite").parquet(path)
 
-        spark_out = pipeline._melt_typed(
+        spark_out = melt_typed(
             spark.read.parquet(path), "sec", ["k1", "k2"])
-        melt = _typed_melt_sql("sec", ["k1", "k2"], ["n1", "d1"], ["s1"])
+        melt = melt_typed_sql("sec", ["k1", "k2"], ["n1", "d1"], ["s1"])
         sql = (f"WITH card_sec AS (SELECT * FROM "
                f"read_parquet('{path}/*.parquet'))\n"
                f"SELECT * FROM (\n{melt}\n)")
